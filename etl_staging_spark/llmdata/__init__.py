@@ -38,8 +38,10 @@ pipeline needs (builder brief, BASELINE north star):
   :mod:`.pipeline`
 
 Everything hot-path is native ``pyspark.sql.functions`` (JVM,
-whole-stage codegen); Python appears only in the mapInPandas
-multimodal decode, which is Arrow-batched by design.
+whole-stage codegen) except three Arrow-batched Python kernels: the
+mapInPandas multimodal decode, and simsearch's two pandas UDFs
+(``_mt_keys_udf`` for multi-table sign-LSH keys, ``_ivf_cells_udf`` for
+IVF probe cells — one numpy matmul per batch each).
 
 Cross-engine determinism: hash-derived values use
 :func:`etl_staging_spark.llmdata.hashing.portable_hash56` — the low

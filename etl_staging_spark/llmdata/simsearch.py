@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from ..card import Card
 from ..numeric import pround
 
 from .hashing import hyperplanes
@@ -1861,7 +1862,7 @@ def cluster_cell_counts(
 ) -> DataFrame:
     """ADDITIVE state, part 1 of the incremental cluster-share mixture:
     per-cell vector counts (cell, n_vecs). Two batches' frames fold by
-    summing n_vecs (`streaming.ingest._fold`) PROVIDED both were
+    summing n_vecs (`card.fold_state`) PROVIDED both were
     assigned under the SAME centroids — pass trained/pinned
     ``centroids=`` for incremental drops, exactly like the persisted
     embedding index pins its hyperplanes."""
@@ -1941,12 +1942,12 @@ def cluster_share_state_delta(
       n_kept finishes from folded state alone: Σ_{b<t_s} hist(s, b)
       IS the filter's count, bit-for-bit.
 
-    Folding two batches' deltas by summing ``n`` (the shared
-    `streaming.ingest._fold`) is exact PROVIDED the cell geometry is
-    fixed, so ``centroids`` is REQUIRED here — incremental deltas are
-    not additive across geometries (the same pinned-literal contract
-    as the persisted embedding index's hyperplanes); the stream
-    wrapper records the fingerprint + salt as state identity."""
+    Folding two batches' deltas by summing ``n`` (`Card.fold`) is
+    exact PROVIDED the cell geometry is fixed, so ``centroids`` is
+    REQUIRED here — incremental deltas are not additive across
+    geometries (the same pinned-literal contract as the persisted
+    embedding index's hyperplanes); :func:`cluster_share_spec` records
+    the fingerprint + salt as state identity."""
     if centroids is None:
         raise ValueError(
             "cluster_share_state_delta requires pinned centroids=: "
@@ -2042,6 +2043,57 @@ def cluster_share_card_from_state_log(
         F.sum("n").cast("bigint").alias("n_kept")
     )
     return _mixture_card(log.sparkSession, src_stats, kept, domain_col)
+
+
+def cluster_share_spec(
+    target_total: int,
+    centroids: list[list[float]],
+    n_centroids: int = 8,
+    doc_id_col: str = "doc_id",
+    domain_col: str = "source",
+    vec_col: str = "embedding",
+    salt: str = "cellsrc-v1",
+) -> Card:
+    """The cluster-share mixture card as an additive `Card` over joined
+    drops (doc_id, source, embedding): the counts are the three-grain
+    :func:`cluster_share_state_delta` (a vector-less doc counts in the
+    keep histogram only) and the card finishes from the folded state
+    ALONE (:func:`cluster_share_card_from_state_log`). The pinned
+    geometry — centroid fingerprint, cell count, salt and column
+    names — is the state's identity; ``target_total`` is deliberately
+    NOT: it is a finish-time knob, so the same state re-finishes at
+    any target."""
+
+    def counts(drops: DataFrame) -> DataFrame:
+        emb = drops.where(F.col(vec_col).isNotNull()).select(
+            F.col(doc_id_col).alias("vec_id"), F.col(vec_col)
+        )
+        return cluster_share_state_delta(
+            drops,
+            emb,
+            centroids=centroids,
+            n_centroids=n_centroids,
+            id_col="vec_id",
+            vec_col=vec_col,
+            doc_id_col=doc_id_col,
+            domain_col=domain_col,
+            salt=salt,
+        )
+
+    return Card(
+        counts,
+        lambda folded: cluster_share_card_from_state_log(
+            folded, target_total, domain_col=domain_col
+        ),
+        key_cols=("grain", domain_col, "cell"),
+        params={
+            "centroids_fp": centroid_fingerprint(centroids),
+            "n_centroids": n_centroids,
+            "salt": salt,
+            "domain_col": domain_col,
+            "vec_col": vec_col,
+        },
+    )
 
 
 def _state_src_stats(counts: dict, matrix_rows) -> dict:

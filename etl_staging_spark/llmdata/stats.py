@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
+from ..card import Card
 from ..numeric import pround, py_pround
 from .textstats import TOKEN_RE, lang_id
 
@@ -871,14 +872,11 @@ def length_histogram_card(
     the BOUNDED histogram frame (#sources x <=26 buckets), never the
     corpus. No join, no Python.
 
-    Split into :func:`length_hist_counts` (the additive delta) and
-    :func:`finish_length_card` (the presentation) so the streaming
-    twin (`streaming.ingest.length_card_stream`) maintains the same
-    card incrementally — counts merge by addition, the finish reruns
-    on the bounded merged frame."""
-    return finish_length_card(
-        length_hist_counts(docs, source_col=source_col, text_col=text_col)
-    )
+    An additive card (:func:`length_spec`): the streaming twin
+    (`streaming.ingest.length_card_stream`) maintains the same card
+    incrementally — counts merge by addition, the finish reruns on the
+    bounded merged frame."""
+    return length_spec(source_col, text_col).batch(docs)
 
 
 def length_hist_counts(
@@ -914,6 +912,16 @@ def finish_length_card(hist: DataFrame) -> DataFrame:
     )
 
 
+def length_spec(source_col: str = "source", text_col: str = "text") -> Card:
+    """The length histogram as an additive `Card`."""
+    return Card(
+        lambda d: length_hist_counts(d, source_col, text_col),
+        finish_length_card,
+        key_cols=("source", "lo_tokens"),
+        params={"source_col": source_col},
+    )
+
+
 def ttr_card(
     docs: DataFrame,
     source_col: str = "source",
@@ -937,10 +945,9 @@ def ttr_card(
     (map-side combinable — the same token-string shuffle width
     `token_drift_card` moves) -> per-source rollup whose input is
     bounded by per-source vocabulary, not corpus size. No window, no
-    join, no Python."""
-    return finish_ttr_card(
-        ttr_token_counts(docs, source_col=source_col, text_col=text_col)
-    )
+    join, no Python. An additive card over the vocabulary state
+    (:func:`ttr_spec`)."""
+    return ttr_spec(source_col, text_col).batch(docs)
 
 
 def ttr_token_counts(
@@ -978,6 +985,18 @@ def finish_ttr_card(per_tok: DataFrame) -> DataFrame:
         "n_hapax",
         pround(F.col("n_types") / F.col("n_tokens"), 6).alias("ttr"),
         pround(F.col("n_hapax") / F.col("n_types"), 6).alias("hapax_rate"),
+    )
+
+
+def ttr_spec(source_col: str = "source", text_col: str = "text") -> Card:
+    """The TTR card as an additive `Card` over the (source, token, cnt)
+    occurrence state: a token seen once in each of two batches folds to
+    cnt=2, not hapax."""
+    return Card(
+        lambda d: ttr_token_counts(d, source_col, text_col),
+        finish_ttr_card,
+        key_cols=("source", "token"),
+        params={"source_col": source_col},
     )
 
 
@@ -1067,11 +1086,10 @@ def pii_rate_by_source(
     row-local projection -> ONE map-side-combinable source aggregate.
     No join, no window, no Python.
 
-    Split into :func:`pii_counts` (the additive delta) and
-    :func:`finish_pii_card` (the presentation) so the streaming twin
+    An additive card (:func:`pii_spec`): the streaming twin
     (`streaming.ingest.pii_card_stream`) maintains the counts
     incrementally and re-derives the card per batch."""
-    return finish_pii_card(pii_counts(docs, source_col, text_col))
+    return pii_spec(source_col, text_col).batch(docs)
 
 
 PII_COUNT_COLS = ("n_docs", "n_emails", "n_phones", "n_ids", "n_pii_docs")
@@ -1122,6 +1140,16 @@ def finish_pii_card(counts: DataFrame) -> DataFrame:
         pround(F.col("n_pii_docs") / F.col("n_docs"), 6).alias(
             "pii_doc_rate"
         ),
+    )
+
+
+def pii_spec(source_col: str = "source", text_col: str = "text") -> Card:
+    """The PII incidence card as an additive `Card`."""
+    return Card(
+        lambda d: pii_counts(d, source_col, text_col),
+        finish_pii_card,
+        key_cols=("source",),
+        params={"source_col": source_col},
     )
 
 
@@ -1208,16 +1236,10 @@ def charclass_profile_card(
     removals) -> ONE map-side-combinable source aggregate. No join,
     no window, no Python.
 
-    Split into :func:`charclass_counts` (the additive delta) and
-    :func:`finish_charclass_card` (the presentation) so the streaming
-    twin (`streaming.ingest.charclass_card_stream`) maintains the
-    counts incrementally and re-derives the card per batch."""
-    return finish_charclass_card(
-        charclass_counts(docs, source_col, text_col)
-    )
-
-
-CHARCLASS_COUNT_COLS = ("n_docs", "n_chars", "n_alpha", "n_digit", "n_space")
+    An additive card (:func:`charclass_spec`): the streaming twin
+    (`streaming.ingest.charclass_card_stream`) maintains the counts
+    incrementally and re-derives the card per batch."""
+    return charclass_spec(source_col, text_col).batch(docs)
 
 
 def charclass_counts(
@@ -1268,6 +1290,16 @@ def finish_charclass_card(counts: DataFrame) -> DataFrame:
             - F.col("n_digit")
             - F.col("n_space")
         ).alias("other_frac"),
+    )
+
+
+def charclass_spec(source_col: str = "source", text_col: str = "text") -> Card:
+    """The character-class profile as an additive `Card`."""
+    return Card(
+        lambda d: charclass_counts(d, source_col, text_col),
+        finish_charclass_card,
+        key_cols=("source",),
+        params={"source_col": source_col},
     )
 
 
@@ -1387,15 +1419,11 @@ def token_fertility_by_lang(docs: DataFrame) -> DataFrame:
     doc_id re-join) -> ONE map-side-combinable aggregate on a bounded
     key (#profiles + 1). No join, no window, no Python.
 
-    Split into :func:`fertility_counts` (the additive delta) and
-    :func:`finish_fertility_card` (the presentation) so the streaming
-    twin (`streaming.ingest.fertility_card_stream`) maintains the
+    An additive card (:data:`FERTILITY_SPEC`): the streaming twin
+    (`streaming.ingest.fertility_card_stream`) maintains the
     per-language sums incrementally and re-derives the ratio per
     batch."""
-    return finish_fertility_card(fertility_counts(docs))
-
-
-FERTILITY_COUNT_COLS = ("n_docs", "n_chars", "n_tokens")
+    return FERTILITY_SPEC.batch(docs)
 
 
 def fertility_counts(docs: DataFrame) -> DataFrame:
@@ -1436,6 +1464,14 @@ def finish_fertility_card(counts: DataFrame) -> DataFrame:
             pround(F.col("n_chars") / F.col("n_tokens"), 6),
         ).alias("chars_per_token"),
     )
+
+
+# parameter-free: the state identity is the lang-ID profile set itself
+FERTILITY_SPEC = Card(
+    fertility_counts,
+    finish_fertility_card,
+    key_cols=("pred_lang",),
+)
 
 
 def length_quality_joint_card(docs: DataFrame) -> DataFrame:
@@ -1698,17 +1734,11 @@ def truncation_loss_card(
     Scale shape: one row-local projection -> ONE map-side-combinable
     source aggregate. No join, no window, no Python.
 
-    Split into :func:`truncation_counts` (the additive delta) and
-    :func:`finish_truncation_card` (the presentation) so the streaming
-    twin (`streaming.ingest.truncation_card_stream`) maintains the
-    sums incrementally — the cost of a candidate context length stays
+    An additive card (:func:`truncation_spec`): the streaming twin
+    (`streaming.ingest.truncation_card_stream`) maintains the sums
+    incrementally — the cost of a candidate context length stays
     current as drops arrive."""
-    return finish_truncation_card(
-        truncation_counts(docs, max_len, source_col, text_col)
-    )
-
-
-TRUNCATION_COUNT_COLS = ("n_docs", "n_tokens", "n_truncated", "tokens_lost")
+    return truncation_spec(max_len, source_col, text_col).batch(docs)
 
 
 def truncation_counts(
@@ -1754,6 +1784,20 @@ def finish_truncation_card(counts: DataFrame) -> DataFrame:
             F.col("n_tokens") > 0,
             pround(F.col("tokens_lost") / F.col("n_tokens"), 6),
         ).alias("loss_rate"),
+    )
+
+
+def truncation_spec(
+    max_len: int = 512, source_col: str = "source", text_col: str = "text"
+) -> Card:
+    """The truncation-loss card as an additive `Card`; ``max_len`` is
+    part of the state's identity (counts cut at different lengths
+    describe no single context length)."""
+    return Card(
+        lambda d: truncation_counts(d, max_len, source_col, text_col),
+        finish_truncation_card,
+        key_cols=("source",),
+        params={"max_len": max_len, "source_col": source_col},
     )
 
 
@@ -1862,15 +1906,10 @@ def source_concentration_card(
     projection, then a #sources-bounded reduce: a 1-row totals
     aggregate, a TakeOrdered(1) for the dominant source, and one
     broadcast cross of the two 1-row frames. No corpus-scale window,
-    no Python. Split as additive counts + finish so
+    no Python. An additive card (:func:`concentration_spec`) so
     `streaming.ingest.concentration_card_stream` maintains the same
     card incrementally."""
-    return finish_concentration_card(
-        concentration_counts(docs, source_col, text_col)
-    )
-
-
-CONCENTRATION_COUNT_COLS = ("n_docs_s", "n_tok_s")
+    return concentration_spec(source_col, text_col).batch(docs)
 
 
 def concentration_counts(
@@ -1879,7 +1918,7 @@ def concentration_counts(
     text_col: str = "text",
 ) -> DataFrame:
     """The ADDITIVE half of `source_concentration_card`: per-source doc
-    and token counts (integers — `_fold` merges them across batches).
+    and token counts (integers — `Card.fold` merges them across batches).
     NULL-text docs count with zero tokens (COALESCE at the delta level
     keeps the column additive)."""
     return docs.groupBy(F.col(source_col).alias("source")).agg(
@@ -1936,6 +1975,18 @@ def finish_concentration_card(per: DataFrame) -> DataFrame:
                 pround(dd("__top_t") / dd("n_tokens"), 6),
             ).alias("top_token_share"),
         )
+    )
+
+
+def concentration_spec(
+    source_col: str = "source", text_col: str = "text"
+) -> Card:
+    """The mixture-concentration card as an additive `Card`."""
+    return Card(
+        lambda d: concentration_counts(d, source_col, text_col),
+        finish_concentration_card,
+        key_cols=("source",),
+        params={"source_col": source_col},
     )
 
 
@@ -2113,11 +2164,8 @@ def quality_by_lang(
     recomputation drift). Scale shape: two row-local projections
     chained on doc_id (one doc-keyed join of one-row-per-doc frames)
     -> ONE map-side-combinable aggregate on the bounded
-    #profiles+1 key."""
-    return finish_quality_by_lang(quality_lang_counts(docs, low_cut, text_col))
-
-
-QUALITY_LANG_COUNT_COLS = ("n_docs", "q_micro", "qn", "low_q_docs")
+    #profiles+1 key. An additive card (:func:`quality_lang_spec`)."""
+    return quality_lang_spec(low_cut, text_col).batch(docs)
 
 
 def quality_lang_counts(
@@ -2127,7 +2175,7 @@ def quality_lang_counts(
     doc count, the quality sum as EXACT micro-units (the per-doc score
     is prounded to 6 decimals, so floor(q*1e6 + 0.5) recovers its
     integer numerator exactly and the sum is a foldable BIGINT — the
-    delta-log `_fold` sums bigints, where a DECIMAL column would be
+    delta-log fold sums bigints, where a DECIMAL column would be
     truncated), the quality-carrying doc count, and the below-cutoff
     count (the cut compares the prounded score inside the row-local
     delta, so folding never re-decides it)."""
@@ -2185,4 +2233,16 @@ def finish_quality_by_lang(per: DataFrame) -> DataFrame:
             F.col("qn") > 0,
             pround(F.col("low_q_docs").cast("double") / F.col("qn"), 6),
         ).alias("low_q_rate"),
+    )
+
+
+def quality_lang_spec(low_cut: float = 0.5, text_col: str = "text") -> Card:
+    """The quality-by-language card as an additive `Card`; ``low_cut``
+    is part of the state's identity (deltas taken at different cutoffs
+    would mix two below-cut definitions)."""
+    return Card(
+        lambda d: quality_lang_counts(d, low_cut, text_col),
+        finish_quality_by_lang,
+        key_cols=("pred_lang",),
+        params={"low_cut": low_cut},
     )

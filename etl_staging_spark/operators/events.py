@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..card import Card
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 O_TS = "strftime({col}, '%Y-%m-%d %H:%M:%S.%f')"
 
@@ -679,17 +681,24 @@ def finish_volume_card(counts: DataFrame) -> DataFrame:
     )
 
 
+# the additive-card spec on a NON-documents table: the delta is typed
+# integer counts, so the same `Card.fold` merges it; parameter-free
+VOLUME_SPEC = Card(
+    volume_counts,
+    finish_volume_card,
+    key_cols=("event_type",),
+)
+
+
 def volume_card(events: DataFrame) -> DataFrame:
     """Per-event-type volume card: event count, non-NULL value count
     and the exact-decimal value total — the ops-dashboard rollup that
     says what the event stream is made of, maintained incrementally by
-    `streaming.ingest.events_volume_stream` (the additive-card
-    machinery applied to a non-documents table: the delta is typed
-    integer counts, so the same `_fold` merges it).
+    `streaming.ingest.events_volume_stream` (:data:`VOLUME_SPEC`).
 
     Scale shape: ONE map-side-combinable aggregate on the bounded
     event-type key. No join, no window, no Python."""
-    return finish_volume_card(volume_counts(events))
+    return VOLUME_SPEC.batch(events)
 
 
 def o_volume_card(source_sql: str = "events") -> str:

@@ -102,9 +102,9 @@ def events_volume_card(spark, sf_dir):
     the r16 queue): event count, non-NULL value count, exact-decimal
     value total — the ops-dashboard rollup `streaming.ingest.
     events_volume_stream` maintains incrementally (same additive
-    counts + `_fold` machinery as the documents cards). ONE
+    counts + `Card.fold` machinery as the documents cards). ONE
     map-side-combinable aggregate on the bounded event-type key; no
-    join, no window, no Python (`operators/events.py:682`)."""
+    join, no window, no Python (`operators/events.py:volume_card`)."""
     return ev.volume_card(load(spark, sf_dir, "events"))
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..card import fold_state
 from ..llmdata import cluster, decontam, dedup, lexsearch, multimodal, pii, simsearch, textstats
 from ..llmdata.hashing import (
     BAND_ROWS,
@@ -3637,30 +3638,14 @@ def ttr_card_q(spark, sf_dir):
 
 @query("ttr_card_stream_fold", oracle=o_ttr_card())
 def ttr_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the TTR STREAM's maintenance path (new r15 — the
-    last DISTINCT fold shape in the additive-card family without a
-    driver row): where the other card streams fold bounded-key COUNT
-    deltas, the TTR stream folds the per-source VOCABULARY state
-    (source, token, cnt), because types and hapax counts are not
-    additive but the occurrence counts they derive from are. Three
-    pmod(doc_id, 3) micro-batch deltas (`stats.ttr_token_counts`),
-    merged by THE shared `streaming.ingest._fold` — a token hapax in
-    two different batches must come out cnt=2, NOT hapax — and
-    presented by `stats.finish_ttr_card`, hash-matched against the
-    batch card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.ttr_token_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source", "token"), ("cnt",))
-    return stats.finish_ttr_card(merged)
+    """Batch twin of the TTR STREAM's maintenance path (new r15): where
+    the other card streams fold bounded-key COUNT deltas, the TTR
+    stream folds the per-source VOCABULARY state (source, token, cnt),
+    because types and hapax counts are not additive but the occurrence
+    counts they derive from are. `Card.replay` over `stats.ttr_spec` —
+    a token hapax in two different batches must come out cnt=2, NOT
+    hapax — hash-matched against the batch card's own DuckDB oracle."""
+    return stats.ttr_spec().replay(load(spark, sf_dir, "documents"))
 
 
 @query("lang_source_matrix", oracle=o_lang_source_matrix())
@@ -3705,35 +3690,18 @@ def vocab_coverage_by_source_q(spark, sf_dir):
 @query("length_card_stream_fold", oracle=o_length_histogram_card())
 def length_card_stream_fold_q(spark, sf_dir):
     """Batch twin of the STREAMING card-maintenance path (registered
-    r13, VERDICT r12 item 7): the documents table is split into three
-    micro-batches (pmod(doc_id, 3) — the arrival order a stream might
-    deliver), each batch's ADDITIVE delta (`stats.length_hist_counts`)
-    is tagged with its batch_id exactly as `additive_card_stream`
-    writes its delta-log partitions, and the union is merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_length_card` — the same two functions the live
-    stream and `compact_card_state` run. Hash-matching the batch
-    card's own DuckDB oracle certifies the fold/finish semantics
-    (additivity across batches) that the streaming pytests can only
-    pin Spark-vs-Spark. The log never touches disk here: the
+    r13, VERDICT r12 item 7): `Card.replay` splits the documents table
+    into three micro-batches (pmod(doc_id, 3) — the arrival order a
+    stream might deliver), folds each batch's additive counts and
+    finishes them with the same `stats.length_spec` the live stream
+    and `compact_card_state` run. Hash-matching the batch card's own
+    DuckDB oracle certifies the fold/finish semantics (additivity
+    across batches) that the streaming pytests can only pin
+    Spark-vs-Spark. The log never touches disk here: the
     partitioned-parquet round-trip, checkpoint ownership, and replay
     idempotence are the streaming tests' subject
     (tests/test_streaming.py)."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    # NULL-safe split: pmod(NULL, 3) is NULL and would match no batch,
-    # silently dropping a NULL-doc_id doc the oracle counts
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.length_hist_counts(
-            docs.where(bucket == b)
-        ).withColumn("batch_id", F.lit(b))
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source", "lo_tokens"), ("n_docs",))
-    return stats.finish_length_card(merged)
+    return stats.length_spec().replay(load(spark, sf_dir, "documents"))
 
 
 def o_pii_rate_by_source() -> str:
@@ -4215,25 +4183,11 @@ def pii_rate_by_source_q(spark, sf_dir):
 @query("pii_card_stream_fold", oracle=o_pii_rate_by_source())
 def pii_card_stream_fold_q(spark, sf_dir):
     """Batch twin of the PII STREAM's maintenance path (new r16, the
-    `concentration_card_stream_fold` pattern): three pmod(doc_id, 3)
-    micro-batches, each batch's additive per-source delta
-    (`stats.pii_counts`), merged by THE shared `streaming.ingest._fold`
-    and presented by `stats.finish_pii_card` — hash-matching the batch
-    card's own DuckDB oracle certifies the fold/finish additivity with
-    a driver row."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.pii_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source",), stats.PII_COUNT_COLS)
-    return stats.finish_pii_card(merged)
+    `length_card_stream_fold` pattern): `Card.replay` over
+    `stats.pii_spec` — three pmod(doc_id, 3) micro-batches of
+    per-source doc and match counts, folded and finished — hash-matched
+    against the batch card's own DuckDB oracle."""
+    return stats.pii_spec().replay(load(spark, sf_dir, "documents"))
 
 
 @query("dup_token_rate_by_source", oracle=o_dup_token_rate_by_source())
@@ -4287,27 +4241,11 @@ def sentence_stats_card_q(spark, sf_dir):
 @query("charclass_card_stream_fold", oracle=o_charclass_profile_card())
 def charclass_card_stream_fold_q(spark, sf_dir):
     """Batch twin of the charclass STREAM's maintenance path (new r16,
-    the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-source
-    character-class sums (`stats.charclass_counts`), merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_charclass_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.charclass_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.CHARCLASS_COUNT_COLS
-    )
-    return stats.finish_charclass_card(merged)
+    the `length_card_stream_fold` pattern): `Card.replay` over
+    `stats.charclass_spec` — three pmod(doc_id, 3) micro-batches of
+    per-source character-class sums, folded and finished —
+    hash-matched against the batch card's own DuckDB oracle."""
+    return stats.charclass_spec().replay(load(spark, sf_dir, "documents"))
 
 
 @query("token_fertility_by_lang", oracle=o_token_fertility_by_lang())
@@ -4324,28 +4262,12 @@ def token_fertility_by_lang_q(spark, sf_dir):
 @query("token_fertility_stream_fold", oracle=o_token_fertility_by_lang())
 def token_fertility_stream_fold_q(spark, sf_dir):
     """Batch twin of the fertility STREAM's maintenance path (new r16,
-    the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-language
-    (docs, chars, tokens) delta (`stats.fertility_counts` — the
-    lang-ID projection runs per batch, as the stream's does), merged
-    by THE shared `streaming.ingest._fold` and presented by
-    `stats.finish_fertility_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.fertility_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("pred_lang",), stats.FERTILITY_COUNT_COLS
-    )
-    return stats.finish_fertility_card(merged)
+    the `length_card_stream_fold` pattern): `Card.replay` over
+    `stats.FERTILITY_SPEC` — three pmod(doc_id, 3) micro-batches of
+    per-language (docs, chars, tokens) sums, the lang-ID projection
+    running per batch as the stream's does, folded and finished —
+    hash-matched against the batch card's own DuckDB oracle."""
+    return stats.FERTILITY_SPEC.replay(load(spark, sf_dir, "documents"))
 
 
 @query("length_quality_joint_card", oracle=o_length_quality_joint_card())
@@ -4403,29 +4325,14 @@ def truncation_loss_card_q(spark, sf_dir):
 
 @query("truncation_card_stream_fold", oracle=o_truncation_loss_card(64))
 def truncation_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the truncation STREAM's maintenance path (new
-    r16, the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-source
-    token/truncation sums at the FIXED max_len=64 the batch card pins
-    (`stats.truncation_counts` — max_len is part of the state's
-    identity, matching the stream's `_guard_card_params` contract),
-    merged by THE shared `streaming.ingest._fold` and presented by
-    `stats.finish_truncation_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.truncation_counts(docs.where(bucket == b), max_len=64)
-        .withColumn("batch_id", F.lit(b))
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.TRUNCATION_COUNT_COLS
-    )
-    return stats.finish_truncation_card(merged)
+    """Batch twin of the truncation STREAM's maintenance path (new r16,
+    the `length_card_stream_fold` pattern): `Card.replay` over
+    `stats.truncation_spec(64)` — three pmod(doc_id, 3) micro-batches
+    of token/truncation sums at the FIXED max_len=64 the batch card
+    pins (max_len is part of the state's identity, the stream's
+    `_guard_card_params` contract), folded and finished — hash-matched
+    against the batch card's own DuckDB oracle."""
+    return stats.truncation_spec(64).replay(load(spark, sf_dir, "documents"))
 
 
 @query("source_signature_terms", oracle=o_source_signature_terms())
@@ -4683,13 +4590,11 @@ def mixture_cluster_share_fold(spark, sf_dir):
     literals are bit-identical to the data-derived rule, the decimal-
     norm replica), the two ADDITIVE states — per-cell vector counts
     and the (source, cell) occupancy matrix — merged by THE shared
-    `streaming.ingest._fold`, and the card finished from the folded
+    `card.fold_state`, and the card finished from the folded
     state alone (`cluster_share_mixture_from_state`: O(#sources x
     #cells) driver math + the keep filter; no vector re-scan).
     Hash-matching the batch card's own oracle certifies the
     state/finish additivity with a driver row."""
-    from ..streaming.ingest import _fold
-
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     cent_arrs, _ = simsearch._resolve_centroids(
@@ -4710,19 +4615,17 @@ def mixture_cluster_share_fold(spark, sf_dir):
                 docs_b, emb_b, centroids=cents
             )
         )
-    cells = _fold(
+    cells = fold_state(
         cell_batches[0].unionByName(cell_batches[1]).unionByName(
             cell_batches[2]
         ),
         ("cell",),
-        ("n_vecs",),
     )
-    matrix = _fold(
+    matrix = fold_state(
         mat_batches[0].unionByName(mat_batches[1]).unionByName(
             mat_batches[2]
         ),
         ("source", "cell"),
-        ("n_docs",),
     )
     return simsearch.cluster_share_mixture_from_state(
         docs, cells, matrix, _MIX_TARGET
@@ -4741,17 +4644,14 @@ def mixture_cluster_share_state_card(spark, sf_dir):
     (`simsearch.cluster_share_state_delta`: per-cell vector counts +
     (source, cell) occupancy + the (source, keep-bucket) histogram,
     ONE shared assignment pass under centroids pinned from the full
-    embeddings), the deltas merged by THE shared
-    `streaming.ingest._fold`, and the card finished from the folded
-    state ALONE (`cluster_share_card_from_state_log`). Unlike
+    embeddings), the deltas folded and finished by
+    `simsearch.cluster_share_spec` — from the folded state ALONE. Unlike
     `mixture_cluster_share_fold`, even n_kept comes from the folded
     bucket histogram — Σ_{b<t_s} hist(s, b) — so the finish touches
     zero corpus rows; hash-matching the batch card's unchanged oracle
     certifies that the histogram IS the keep filter, bit-for-bit.
     This is exactly the state `cluster_share_card_stream` maintains
     on disk per micro-batch."""
-    from ..streaming.ingest import _fold
-
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     cent_arrs, _ = simsearch._resolve_centroids(
@@ -4768,12 +4668,9 @@ def mixture_cluster_share_state_card(spark, sf_dir):
         )
         for b in range(3)
     ]
-    log = _fold(
-        deltas[0].unionByName(deltas[1]).unionByName(deltas[2]),
-        ("grain", "source", "cell"),
-        ("n",),
-    )
-    return simsearch.cluster_share_card_from_state_log(log, _MIX_TARGET)
+    card = simsearch.cluster_share_spec(_MIX_TARGET, cents)
+    log = deltas[0].unionByName(deltas[1]).unionByName(deltas[2])
+    return card.finish(card.fold(log))
 
 
 @query("mm_usability_card", oracle=o_mm_usability_card(16))
@@ -5225,29 +5122,11 @@ def snapshot_drift_card_q(spark, sf_dir):
 )
 def concentration_card_stream_fold_q(spark, sf_dir):
     """Batch twin of the concentration STREAM's maintenance path (new
-    r14, the `length_card_stream_fold` pattern): the documents table
-    splits into three micro-batches (pmod(doc_id, 3)), each batch's
-    additive per-source delta (`stats.concentration_counts`) is tagged
-    like the delta log's partitions, and the union is merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_concentration_card` — hash-matching the batch card's
-    own DuckDB oracle certifies the fold/finish additivity the
-    streaming pytests can only pin Spark-vs-Spark."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.concentration_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.CONCENTRATION_COUNT_COLS
-    )
-    return stats.finish_concentration_card(merged)
+    r14, the `length_card_stream_fold` pattern): `Card.replay` over
+    `stats.concentration_spec` — three pmod(doc_id, 3) micro-batches
+    of per-source doc/token counts, folded and finished — hash-matched
+    against the batch card's own DuckDB oracle."""
+    return stats.concentration_spec().replay(load(spark, sf_dir, "documents"))
 
 
 def o_quality_by_lang(low_cut: float = 0.5) -> str:
@@ -5307,28 +5186,14 @@ def quality_by_lang_q(spark, sf_dir):
 @query("quality_by_lang_stream_fold", oracle=o_quality_by_lang(0.5))
 def quality_by_lang_stream_fold_q(spark, sf_dir):
     """Batch twin of the quality-by-language STREAM's maintenance path
-    (new r15, the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-language
-    delta (`stats.quality_lang_counts` — micro-unit BIGINT quality
-    sums), merged by THE shared `streaming.ingest._fold` and presented
-    by `stats.finish_quality_by_lang` — hash-matching the batch card's
-    own DuckDB oracle certifies the fold/finish additivity (including
-    the exact-integer quality-sum representation) with a driver row."""
-    from ..streaming.ingest import _fold
-
+    (new r15, the `length_card_stream_fold` pattern): `Card.replay`
+    over `stats.quality_lang_spec(0.5)` — three pmod(doc_id, 3)
+    micro-batches of per-language counts with micro-unit BIGINT quality
+    sums, folded and finished — hash-matched against the batch card's
+    own DuckDB oracle, which certifies the exact-integer quality-sum
+    representation too."""
     docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.quality_lang_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("pred_lang",), stats.QUALITY_LANG_COUNT_COLS
-    )
-    return stats.finish_quality_by_lang(merged)
+    return stats.quality_lang_spec(0.5).replay(docs)
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..llmdata import dedup
+from ..card import Card, fold_state
+from ..llmdata import dedup, stats
 from ..tables import release_pinned
 
 DOC_SCHEMA = StructType(
@@ -732,21 +733,18 @@ def _guard_card_params(state_dir: str, params: dict | None) -> None:
 def additive_card_stream(
     docs_stream: DataFrame,
     state_dir: str,
-    delta_fn: Callable[[DataFrame], DataFrame],
-    key_cols: tuple[str, ...],
-    finish_fn: Callable[[DataFrame], DataFrame],
+    card: Card,
     on_batch: Callable[[int, DataFrame], None],
-    count_cols: tuple[str, ...] = ("n_docs",),
     query_name: str = "additive_card",
     checkpoint_dir: str | None = None,
-    state_params: dict | None = None,
 ):
     """Incremental dataset-card maintenance: per micro-batch, compute
-    the batch's ADDITIVE counts (``delta_fn``), append them to a
+    the batch's ADDITIVE counts (``card.counts``), append them to a
     batch_id-partitioned delta log, and hand the REFRESHED card
-    (``finish_fn`` over the re-merged log) to ``on_batch`` — the
+    (``card.finish`` over the re-merged log) to ``on_batch`` — the
     dataset card stays current at ingest time without ever re-scanning
-    the corpus; each batch pays O(batch) + O(log).
+    the corpus; each batch pays O(batch) + O(log). ``card.params`` is
+    recorded as the state's identity (`_guard_card_params`).
 
     Replay convergence: the delta partition is keyed by batch_id and
     written with DYNAMIC partition overwrite (`etl.sinks.
@@ -766,7 +764,7 @@ def additive_card_stream(
     non-empty local ``state_dir`` without ``checkpoint_dir`` is
     refused at start."""
     _guard_card_state(state_dir, checkpoint_dir, docs_stream.sparkSession)
-    _guard_card_params(state_dir, state_params)
+    _guard_card_params(state_dir, card.params)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
@@ -776,10 +774,10 @@ def additive_card_stream(
 
         spark = batch_df.sparkSession
         delta = (
-            delta_fn(batch_df)
+            card.counts(batch_df)
             .withColumn("batch_id", F.lit(batch_id))
             # the aggregated delta is read twice (emptiness probe +
-            # write); without the pin the whole delta_fn aggregation
+            # write); without the pin the whole counts aggregation
             # over the batch would run twice per micro-batch
             .persist()
         )
@@ -792,26 +790,12 @@ def additive_card_stream(
                 # nothing ever written (every batch so far all-NULL
                 # text): the empty delta carries the correct schema
                 log = delta
-            _handoff(
-                on_batch, batch_id, finish_fn(_fold(log, key_cols, count_cols))
-            )
+            _handoff(on_batch, batch_id, card.finish(card.fold(log)))
         finally:
             delta.unpersist()
 
     return _start(
         docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir
-    )
-
-
-def _fold(log: DataFrame, key_cols: tuple[str, ...],
-          count_cols: tuple[str, ...]) -> DataFrame:
-    """THE delta-log merge, shared by the per-batch refresh and the
-    offline compaction so the two can never diverge (key set, sum,
-    bigint cast)."""
-    from pyspark.sql import functions as F
-
-    return log.groupBy(*key_cols).agg(
-        *[F.sum(c).cast("bigint").alias(c) for c in count_cols]
     )
 
 
@@ -828,19 +812,9 @@ def length_card_stream(
     presentation reruns on the bounded merged frame — after any batch,
     the emitted card equals the batch card over every document seen so
     far (the parity pytest pins it)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.length_hist_counts(b, source_col=source_col),
-        ("source", "lo_tokens"),
-        stats.finish_length_card,
-        on_batch,
-        count_cols=("n_docs",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, stats.length_spec(source_col), on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -857,19 +831,9 @@ def ttr_card_stream(
     per-source VOCABULARY, not corpus size — because types and hapax
     counts are not additive but the counts they derive from are. The
     rollup/rates rerun on the merged state each batch."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.ttr_token_counts(b, source_col=source_col),
-        ("source", "token"),
-        stats.finish_ttr_card,
-        on_batch,
-        count_cols=("cnt",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, stats.ttr_spec(source_col), on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -887,19 +851,9 @@ def pii_card_stream(
     presentation reruns on the bounded merged frame — PII incidence
     stays current at ingest time, the release-review read without a
     corpus re-scan."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.pii_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_pii_card,
-        on_batch,
-        count_cols=stats.PII_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, stats.pii_spec(source_col), on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -917,19 +871,9 @@ def charclass_card_stream(
     encoding-health read stays current as drops arrive (a mojibake
     crawl surfaces on its FIRST batch, not at the next full-corpus
     audit)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.charclass_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_charclass_card,
-        on_batch,
-        count_cols=stats.CHARCLASS_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, stats.charclass_spec(source_col), on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -947,18 +891,9 @@ def fertility_card_stream(
     frame (#profiles + 1 rows). A tokenizer-bias drift (a new crawl
     shifting a language's fertility) surfaces on its first batch, not
     at the next full-corpus audit."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        stats.fertility_counts,
-        ("pred_lang",),
-        stats.finish_fertility_card,
-        on_batch,
-        count_cols=stats.FERTILITY_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
+        docs_stream, state_dir, stats.FERTILITY_SPEC, on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -981,21 +916,9 @@ def truncation_card_stream(
     (`_guard_card_params`): restarting an existing state with a
     DIFFERENT cut is refused rather than silently merging counts that
     correspond to no single context length."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.truncation_counts(
-            b, max_len=max_len, source_col=source_col
-        ),
-        ("source",),
-        stats.finish_truncation_card,
-        on_batch,
-        count_cols=stats.TRUNCATION_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"max_len": max_len, "source_col": source_col},
+        docs_stream, state_dir, stats.truncation_spec(max_len, source_col),
+        on_batch, query_name, checkpoint_dir,
     )
 
 
@@ -1016,15 +939,8 @@ def events_volume_stream(
     from ..operators import events as ev
 
     return additive_card_stream(
-        events_stream,
-        state_dir,
-        ev.volume_counts,
-        ("event_type",),
-        ev.finish_volume_card,
-        on_batch,
-        count_cols=("n_events", "n_value", "value_cents"),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
+        events_stream, state_dir, ev.VOLUME_SPEC, on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -1064,43 +980,13 @@ def cluster_share_card_stream(
     target, or call `cluster_share_card_from_state_log` offline on
     the folded log)."""
     from ..llmdata import simsearch
-    from pyspark.sql import functions as F
 
-    def _delta(b: DataFrame) -> DataFrame:
-        emb_b = b.where(F.col(vec_col).isNotNull()).select(
-            F.col(doc_id_col).alias("vec_id"), F.col(vec_col)
-        )
-        return simsearch.cluster_share_state_delta(
-            b,
-            emb_b,
-            centroids=centroids,
-            n_centroids=n_centroids,
-            id_col="vec_id",
-            vec_col=vec_col,
-            doc_id_col=doc_id_col,
-            domain_col=domain_col,
-            salt=salt,
-        )
-
+    card = simsearch.cluster_share_spec(
+        target_total, centroids, n_centroids, doc_id_col, domain_col,
+        vec_col, salt,
+    )
     return additive_card_stream(
-        drops_stream,
-        state_dir,
-        _delta,
-        ("grain", domain_col, "cell"),
-        lambda folded: simsearch.cluster_share_card_from_state_log(
-            folded, target_total, domain_col=domain_col
-        ),
-        on_batch,
-        count_cols=("n",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={
-            "centroids_fp": simsearch.centroid_fingerprint(centroids),
-            "n_centroids": n_centroids,
-            "salt": salt,
-            "domain_col": domain_col,
-            "vec_col": vec_col,
-        },
+        drops_stream, state_dir, card, on_batch, query_name, checkpoint_dir
     )
 
 
@@ -1108,7 +994,6 @@ def compact_card_state(
     spark,
     state_dir: str,
     key_cols: tuple[str, ...],
-    count_cols: tuple[str, ...] = ("n_docs",),
     checkpoint_dir: str | None = None,
 ) -> None:
     """Offline maintenance for an `additive_card_stream` delta log:
@@ -1122,7 +1007,12 @@ def compact_card_state(
     already sit in the base). Pass the stream's ``checkpoint_dir`` to
     enforce this: only batch partitions recorded in the checkpoint's
     commits log are folded, uncommitted ones are left in place for the
-    replay to overwrite."""
+    replay to overwrite. The fold sums every log column except
+    ``key_cols`` and ``batch_id`` (`card.fold_state`): a card's count
+    columns are read from its state, never restated by the caller.
+    ``key_cols`` must still name EVERY key column of the state (the
+    card's `Card.key_cols`) — a key left out is summed as if it were a
+    count, and nothing in the state can tell the two apart."""
     import os
 
     from pyspark.sql import functions as F
@@ -1193,7 +1083,7 @@ def compact_card_state(
         foldable = F.col("batch_id") <= max(committed)
         keep = log.where(~foldable)
         log = log.where(foldable)
-    base = _fold(log, key_cols, count_cols).withColumn("batch_id", F.lit(-1))
+    base = fold_state(log, key_cols).withColumn("batch_id", F.lit(-1))
     if keep is not None:
         base = base.unionByName(keep.select(*base.columns))
     # the rewrite reads the very files the static overwrite deletes:
@@ -1238,19 +1128,9 @@ def quality_lang_card_stream(
     on the batch where it lands. ``low_cut`` is part of the state's
     identity (`_guard_card_params`): folding deltas taken at different
     cutoffs would silently mix two different below-cut definitions."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.quality_lang_counts(b, low_cut=low_cut),
-        ("pred_lang",),
-        stats.finish_quality_by_lang,
-        on_batch,
-        count_cols=stats.QUALITY_LANG_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"low_cut": low_cut},
+        docs_stream, state_dir, stats.quality_lang_spec(low_cut), on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -1269,17 +1149,7 @@ def concentration_card_stream(
     silently taking over the token mass surfaces on the batch where it
     happens, not at the next full-corpus audit. The source_col is part
     of the state's identity (`_guard_card_params`)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.concentration_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_concentration_card,
-        on_batch,
-        count_cols=stats.CONCENTRATION_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, stats.concentration_spec(source_col),
+        on_batch, query_name, checkpoint_dir,
     )

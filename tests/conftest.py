@@ -35,67 +35,77 @@ SF_DIR = "/root/testdata/sf0.001"
 #
 # Run everything: python -m pytest tests/ -q -m ""
 _SLOW_MODULES = {"test_plan_lock", "test_plans_global", "test_cards_property"}
+# every entry is (module, test function); `test_tiers.py` checks each
+# names a collected test, so a rename cannot silently move a test into
+# the fast tier
 _ORACLE_SWEEPS = {
-    "test_query_matches_oracle",
-    "test_oracle_arrow_types_are_harness_safe",
+    ("test_catalog_oracle", "test_query_matches_oracle"),
+    ("test_catalog_oracle", "test_oracle_arrow_types_are_harness_safe"),
 }
 _SLOW_TESTS = {
-    # test_llmdata
-    "test_corpus_pipeline_full_hygiene_chain",
-    "test_decontam_rate_by_source_planted_and_duckdb",
-    "test_simhash_pairs_planted",
-    "test_r14_new_cards_match_duckdb_on_real_tables",
-    "test_ann_lsh_subset_of_bruteforce",
-    "test_r15_wave2_cards_match_duckdb_on_real_tables",
-    "test_split_by_cluster_matches_duckdb_oracle",
-    "test_source_overlap_matrix_matches_duckdb_oracle",
-    "test_corpus_pipeline_facade_matches_manual_composition",
-    "test_decontamination_report_all_rungs",
-    # test_streaming
-    "test_assembly_ingest_stream_semantic_rung_matches_batch",
-    "test_multimodal_dedup_stream_matches_batch",
-    "test_assembly_ingest_stream_matches_batch",
-    "test_cluster_share_card_stream_matches_batch_and_refinishes",
-    "test_pii_and_charclass_card_streams_match_batch",
-    "test_quality_lang_card_stream_matches_batch",
-    "test_fertility_card_stream_matches_batch",
-    "test_gated_ingest_clean_and_lang_matches_batch",
-    "test_multimodal_dedup_stream_checkpointed_restart",
-    "test_length_card_stream_matches_batch",
-    "test_ttr_state_serves_cosine_matrix_card",
-    "test_concentration_card_stream_matches_batch",
-    "test_compact_card_state_respects_uncommitted_batches",
-    "test_multimodal_self_maintaining_feature_index",
-    "test_length_card_stream_checkpointed_replay_converges",
-    "test_ttr_state_serves_vocab_coverage_card",
-    "test_interarrival_stream_matches_batch_across_boundary",
-    "test_corpus_pipeline_to_training_set_verifies",
-    "test_corpus_pipeline_dedup_bytes_matches_hand_composed_chain",
-    "test_corpus_pipeline_dedup_keep_quality",
-    "test_corpus_pipeline_cluster_share_and_curriculum",
-    "test_pq_ivf_topk_planted_routing",
-    "test_bpe_train_matches_python_reference",
-    # test_streaming (second wave, 5-7s each; every one is a
-    # stream-vs-batch or restart twin whose batch/stream siblings stay)
-    "test_self_maintaining_ingest_appends_to_index",
-    "test_length_card_stream_crash_replay_overwrites_own_partition",
-    "test_ttr_card_stream_matches_batch_and_compacts",
-    "test_events_volume_stream_matches_batch",
-    "test_truncation_card_stream_matches_batch",
-    "test_lm_score_stream_batch_boundary_independent",
-    "test_length_card_stream_first_batch_all_null_text",
-    "test_checkpointed_ingest_resumes_without_reprocessing",
-    "test_compaction_preserves_params_marker",
-    # test_domain_property
-    "test_domain_sql_backend_matches_column_backend",
-    # test_all_exports
-    "test_dataset_card_assembles_and_exports",
-    "test_report_exports_all_formats",
-    "test_dataset_card_embeddings_optional_but_not_swallowed",
-    "test_dataset_card_empty_corpus_placeholder",
-    "test_dataset_card_all_null_source_corpus",
-    # test_fast_argmax
-    "test_pq_code_fast_matches_exact",
+    (module, name)
+    for module, names in {
+        "test_llmdata": (
+            "test_corpus_pipeline_full_hygiene_chain",
+            "test_decontam_rate_by_source_planted_and_duckdb",
+            "test_simhash_pairs_planted",
+            "test_r14_new_cards_match_duckdb_on_real_tables",
+            "test_ann_lsh_subset_of_bruteforce",
+            "test_r15_wave2_cards_match_duckdb_on_real_tables",
+            "test_split_by_cluster_matches_duckdb_oracle",
+            "test_source_overlap_matrix_matches_duckdb_oracle",
+            "test_corpus_pipeline_facade_matches_manual_composition",
+            "test_decontamination_report_all_rungs",
+            "test_corpus_pipeline_to_training_set_verifies",
+            "test_corpus_pipeline_dedup_bytes_matches_hand_composed_chain",
+            "test_corpus_pipeline_dedup_keep_quality",
+            "test_corpus_pipeline_cluster_share_and_curriculum",
+            "test_pq_ivf_topk_planted_routing",
+            "test_bpe_train_matches_python_reference",
+        ),
+        "test_streaming": (
+            "test_assembly_ingest_stream_semantic_rung_matches_batch",
+            "test_multimodal_dedup_stream_matches_batch",
+            "test_assembly_ingest_stream_matches_batch",
+            "test_cluster_share_card_stream_matches_batch_and_refinishes",
+            "test_pii_and_charclass_card_streams_match_batch",
+            "test_quality_lang_card_stream_matches_batch",
+            "test_fertility_card_stream_matches_batch",
+            "test_gated_ingest_clean_and_lang_matches_batch",
+            "test_multimodal_dedup_stream_checkpointed_restart",
+            "test_length_card_stream_matches_batch",
+            "test_ttr_state_serves_cosine_matrix_card",
+            "test_concentration_card_stream_matches_batch",
+            "test_compact_card_state_respects_uncommitted_batches",
+            "test_multimodal_self_maintaining_feature_index",
+            "test_length_card_stream_checkpointed_replay_converges",
+            "test_ttr_state_serves_vocab_coverage_card",
+            "test_interarrival_stream_matches_batch_across_boundary",
+            # second wave, 5-7s each; every one is a stream-vs-batch or
+            # restart twin whose batch/stream siblings stay
+            "test_self_maintaining_ingest_appends_to_index",
+            "test_length_card_stream_crash_replay_overwrites_own_partition",
+            "test_ttr_card_stream_matches_batch_and_compacts",
+            "test_events_volume_stream_matches_batch",
+            "test_truncation_card_stream_matches_batch",
+            "test_lm_score_stream_batch_boundary_independent",
+            "test_length_card_stream_first_batch_all_null_text",
+            "test_checkpointed_ingest_resumes_without_reprocessing",
+            "test_compaction_preserves_params_marker",
+        ),
+        "test_domain_property": (
+            "test_domain_sql_backend_matches_column_backend",
+        ),
+        "test_all_exports": (
+            "test_dataset_card_assembles_and_exports",
+            "test_report_exports_all_formats",
+            "test_dataset_card_embeddings_optional_but_not_swallowed",
+            "test_dataset_card_empty_corpus_placeholder",
+            "test_dataset_card_all_null_source_corpus",
+        ),
+        "test_fast_argmax": ("test_pq_code_fast_matches_exact",),
+    }.items()
+    for name in names
 }
 
 
@@ -106,19 +116,23 @@ def _oracle_fast(name: str) -> bool:
     return int(hashlib.md5(name.encode()).hexdigest(), 16) % 4 == 0
 
 
+def is_slow(module: str, name: str, params: dict) -> bool:
+    """THE tier rule: ``module`` is the test module's basename, ``name``
+    the test function, ``params`` its parametrization."""
+    if module in _SLOW_MODULES:
+        return True
+    if (module, name) in _ORACLE_SWEEPS:
+        return not _oracle_fast(params["name"])
+    return (module, name) in _SLOW_TESTS
+
+
 def pytest_collection_modifyitems(config, items):
-    slow = pytest.mark.slow
     for item in items:
-        mod = item.module.__name__.rsplit(".", 1)[-1] if item.module else ""
-        base = item.name.split("[", 1)[0]
-        if mod in _SLOW_MODULES:
-            item.add_marker(slow)
-        elif base in _ORACLE_SWEEPS:
-            param = item.name[len(base) + 1 : -1]
-            if not _oracle_fast(param):
-                item.add_marker(slow)
-        elif base in _SLOW_TESTS:
-            item.add_marker(slow)
+        module = item.module.__name__.rsplit(".", 1)[-1] if item.module else ""
+        callspec = getattr(item, "callspec", None)
+        params = callspec.params if callspec else {}
+        if is_slow(module, getattr(item, "originalname", item.name), params):
+            item.add_marker(pytest.mark.slow)
 
 
 def nsafe_sorted(rows):

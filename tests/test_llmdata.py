@@ -5122,7 +5122,7 @@ def test_cluster_share_state_fold_matches_batch_card(spark):
     (cell, n_vecs) + (source, cell, n_docs) states carry everything
     the finish needs, and no vector is re-scanned at finish time."""
     from etl_staging_spark.llmdata import simsearch
-    from etl_staging_spark.streaming.ingest import _fold
+    from etl_staging_spark.card import fold_state
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -5150,13 +5150,13 @@ def test_cluster_share_state_fold_matches_batch_card(spark):
             emb.where(vp),
             centroids=cents,
         ))
-    cells = _fold(
+    cells = fold_state(
         cell_parts[0].unionByName(cell_parts[1]).unionByName(cell_parts[2]),
-        ("cell",), ("n_vecs",),
+        ("cell",),
     )
-    matrix = _fold(
+    matrix = fold_state(
         mat_parts[0].unionByName(mat_parts[1]).unionByName(mat_parts[2]),
-        ("source", "cell"), ("n_docs",),
+        ("source", "cell"),
     )
     got = sorted(tuple(r) for r in simsearch.cluster_share_mixture_from_state(
         docs.select("doc_id", "source"), cells, matrix, 200

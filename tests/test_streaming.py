@@ -1150,7 +1150,7 @@ def test_ttr_card_stream_matches_batch_and_compacts(spark, tmp_path):
     assert s1[1:4] == (4, 3, 2)
 
     # compaction: one base partition, same derived card
-    compact_card_state(spark, state, ("source", "token"), count_cols=("cnt",))
+    compact_card_state(spark, state, ("source", "token"))
     log = spark.read.parquet(state)
     assert [r.batch_id for r in log.select("batch_id").distinct().collect()] == [-1]
     after = [
@@ -1652,7 +1652,7 @@ def test_length_card_fold_twin_equals_batch_card(spark):
     """The certified `length_card_stream_fold` entry (the registry's
     batch twin of the streaming card path) equals the direct batch
     card on the real table: 3-way batch split -> per-batch additive
-    deltas -> shared `_fold` -> `finish_length_card` is exactly
+    deltas -> `Card.fold` -> `finish_length_card` is exactly
     `length_histogram_card` in one scan — additivity certified
     Spark-vs-Spark here and against DuckDB by the registry oracle."""
     from etl_staging_spark.llmdata import stats
@@ -1681,8 +1681,8 @@ def test_ttr_state_serves_vocab_coverage_card(spark, tmp_path):
     over the same documents — no second corpus scan, no second state."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from etl_staging_spark.llmdata import vocab
-    from etl_staging_spark.streaming.ingest import _fold, ttr_card_stream
+    from etl_staging_spark.llmdata import stats, vocab
+    from etl_staging_spark.streaming.ingest import ttr_card_stream
     from etl_staging_spark.tables import release_pinned
 
     schema = StructType(
@@ -1715,9 +1715,7 @@ def test_ttr_state_serves_vocab_coverage_card(spark, tmp_path):
     )
     q.awaitTermination()
 
-    merged = _fold(
-        spark.read.parquet(state), ("source", "token"), ("cnt",)
-    )
+    merged = stats.ttr_spec().fold(spark.read.parquet(state))
     got = sorted(
         tuple(r)
         for r in vocab.vocab_coverage_from_counts(merged, k=2).collect()
@@ -1855,7 +1853,7 @@ def test_ttr_state_serves_cosine_matrix_card(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from etl_staging_spark.llmdata import stats
-    from etl_staging_spark.streaming.ingest import _fold, ttr_card_stream
+    from etl_staging_spark.streaming.ingest import ttr_card_stream
 
     schema = StructType(
         [
@@ -1888,9 +1886,7 @@ def test_ttr_state_serves_cosine_matrix_card(spark, tmp_path):
     )
     q.awaitTermination()
 
-    merged = _fold(
-        spark.read.parquet(state), ("source", "token"), ("cnt",)
-    )
+    merged = stats.ttr_spec().fold(spark.read.parquet(state))
     got = sorted(
         tuple(r)
         for r in stats.source_vocab_cosine_from_counts(merged).collect()
@@ -2040,7 +2036,6 @@ def test_compaction_preserves_params_marker(spark, tmp_path):
     start(4).awaitTermination()
     compact_card_state(
         spark, state, ("source",),
-        count_cols=("n_docs", "n_tokens", "n_truncated", "tokens_lost"),
         checkpoint_dir=ckpt,
     )
     with pytest.raises(ValueError, match="params"):
@@ -2054,6 +2049,59 @@ def test_compaction_preserves_params_marker(spark, tmp_path):
     final = {r[0]: r[1:] for r in cards[max(cards)]}
     assert final["s1"] == (2, 8, 1, 2, 0.5, 0.25)
     assert before, "first run produced cards"
+
+
+def test_compact_card_state_keeps_every_count_column(spark, tmp_path):
+    """Compaction reads a card's count columns from its state: folding a
+    PII card log by its key alone keeps all five count columns, none of
+    which the caller names, and the card re-finished from the
+    compacted state equals the last card the stream emitted."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from etl_staging_spark.llmdata import stats
+    from etl_staging_spark.streaming.ingest import (
+        compact_card_state,
+        pii_card_stream,
+    )
+
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("source", StringType()),
+        ]
+    )
+    drop_dir = tmp_path / "drops"
+    drop_dir.mkdir()
+    drops = [
+        [(1, "mail bob@example.com now", "s1"), (2, "clean", "s2")],
+        [(3, "call 555-123-4567 id 123456789", "s1"), (4, None, None)],
+    ]
+    for i, rows in enumerate(drops):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(drop_dir / f"f{i}")
+        )
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    cards: dict[int, list] = {}
+    pii_card_stream(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(drop_dir) + "/*"),
+        state,
+        lambda bid, c: cards.__setitem__(bid, [tuple(r) for r in c.collect()]),
+        checkpoint_dir=ckpt,
+    ).awaitTermination()
+    assert len(cards) == 2
+
+    compact_card_state(spark, state, ("source",), checkpoint_dir=ckpt)
+    log = spark.read.parquet(state)
+    assert set(stats.PII_COUNT_COLS) <= set(log.columns)
+    assert [r.batch_id for r in log.select("batch_id").distinct().collect()] == [-1]
+    refinished = [
+        tuple(r) for r in stats.finish_pii_card(log.drop("batch_id")).collect()
+    ]
+    assert _nkey(refinished) == _nkey(cards[max(cards)])
 
 
 def test_params_guard_rotates_on_empty_log(spark, tmp_path):
@@ -2531,16 +2579,15 @@ def test_cluster_share_card_stream_matches_batch_and_refinishes(
         spark,
         state,
         ("grain", "source", "cell"),
-        count_cols=("n",),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     log = spark.read.parquet(state)
     assert [
         r.batch_id for r in log.select("batch_id").distinct().collect()
     ] == [-1]
-    from etl_staging_spark.streaming.ingest import _fold
+    from etl_staging_spark.card import fold_state
 
-    folded = _fold(log, ("grain", "source", "cell"), ("n",))
+    folded = fold_state(log, ("grain", "source", "cell"))
     after = [
         tuple(r)
         for r in simsearch.cluster_share_card_from_state_log(
